@@ -6,6 +6,7 @@ net/url ResolveReference (modules/followlinks/followlinks.go:70).
 We expose:
 
 - ``host_of`` / ``scheme_of``  — JVM-side parse_url (no Python),
+- ``host_of_str``              — ``host_of`` for Python strings,
 - ``canonicalize``             — RFC-3986-lite canonical form as a pure
   Column expression chain, with a DuckDB rendering
   (``canonicalize_sql``) kept step-for-step identical so the driver's
@@ -23,18 +24,51 @@ Canonical steps (applied only to http/https absolute URLs):
 
 from __future__ import annotations
 
-from urllib.parse import urljoin, urlparse
+import re
+from urllib.parse import urljoin, urlparse, urlsplit
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 _ABS = r"^[a-zA-Z][a-zA-Z0-9+.-]*://"
 _PREFIX = r"^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)"
+# java.net.URI: characters no URI may hold, and the server-based host
+# forms (IPv4, or DNS labels whose last one starts with a letter)
+_URI_ILLEGAL = re.compile(r'[\x00-\x20"<>\\^`{|}]')
+_LABEL = r"[a-z0-9](?:[a-z0-9-]*[a-z0-9])?"
+_SERVER_HOST = re.compile(
+    rf"^(?:\d{{1,3}}(?:\.\d{{1,3}}){{3}}"
+    rf"|(?:{_LABEL}\.)*[a-z](?:[a-z0-9-]*[a-z0-9])?\.?)$"
+)
 
 
 def host_of(url: Column | str) -> Column:
+    """Lowercased URI host: no userinfo, no port. NULL for a URL that
+    does not parse (a link with a raw space), also under ANSI mode,
+    where plain ``parse_url`` raises and would fail the whole job."""
     u = F.col(url) if isinstance(url, str) else url
-    return F.lower(F.parse_url(u, F.lit("HOST")))
+    return F.lower(F.try_parse_url(u, F.lit("HOST")))
+
+
+def host_of_str(url: str) -> str | None:
+    """Python twin of :func:`host_of` for plain strings (list
+    seeds): lowercased host without userinfo or port, IPv6 literals
+    bracketed as ``java.net.URI`` returns them. None where the JVM
+    side gives NULL: no host, a non-numeric port, a character URI
+    syntax forbids, or a host that is no IP address or DNS name."""
+    if _URI_ILLEGAL.search(url):
+        return None
+    try:
+        parts = urlsplit(url)
+    except ValueError:
+        return None
+    port = parts.netloc.rpartition("@")[2].rpartition("]")[2].partition(":")[2]
+    if port and not port.isdigit():
+        return None
+    host = parts.hostname
+    if host and ":" in host:
+        return f"[{host}]"
+    return host if host and _SERVER_HOST.match(host) else None
 
 
 def scheme_of(url: Column | str) -> Column:

@@ -30,6 +30,16 @@ Scale design notes (100 TB / 10^10-URL frontier):
 - lineage is truncated every generation (localCheckpoint here;
   snapshot-table commits in checkpointed mode) so plans stay O(1) in
   the number of generations.
+- a small generation's cost is its count of Spark jobs, so no number
+  gets a job of its own: the enqueued count and minimum depth ride the
+  bucketed ordering's counts collect, the snapshot commit's lineage
+  aggregate, or the job that pins the frontier; committed row counts
+  ride the parquet write (an Observation); snapshots read back with
+  the schema they were written with (no inference job).
+- a generation whose URLs all lie past ``config.depth`` (its minimum
+  depth, from the aggregate above) is still deduplicated, ordered and
+  marked seen, but skips robots.txt, fetch and parse and ends the
+  crawl; under a checkpoint it commits empty fetched/links tables.
 - canonical total order costs one global sort per generation over
   *newly discovered* URLs only; ``assign_order=False`` skips it for
   throughput benchmarks where order equality is not being asserted.
@@ -39,6 +49,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field as dc_field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -51,14 +62,17 @@ from pyspark.sql.types import (
 )
 
 from flyscrape_spark.config import CrawlConfig
-from flyscrape_spark.functions.urls import canonicalize, host_of
-from flyscrape_spark.operators.robots import allowed_filter, robots_table
+from flyscrape_spark.functions.urls import canonicalize, host_of, host_of_str
+from flyscrape_spark.operators.robots import (
+    ROBOTS_SCHEMA,
+    allowed_filter,
+    robots_table,
+)
 from flyscrape_spark.parse.udfs import make_page_udf
 from flyscrape_spark.plans import filters as filter_mod
 from flyscrape_spark.plans.filters import validators
 from flyscrape_spark.plans.priority import prioritize_frontier
 from flyscrape_spark.sources.transport import Transport
-from urllib.parse import urlparse
 
 CAND_SCHEMA = StructType(
     [
@@ -140,7 +154,7 @@ def assign_global_order_counted(
         parts = spark.sparkContext.defaultParallelism
     if bounds is not None:
         return _assign_order_bucketed(
-            df, sort_cols, out_col, start, parts, bounds)
+            df, sort_cols, out_col, start, parts, bounds)[:2]
     pinned = df.localCheckpoint(eager=True)
     ranged = (
         pinned.repartitionByRange(parts, *[F.col(c) for c in sort_cols])
@@ -176,12 +190,14 @@ def assign_global_order_counted(
 
 def _assign_order_bucketed(
     df: DataFrame, sort_cols: list[str], out_col: str, start: int,
-    parts: int, bounds: tuple[int, int],
-) -> tuple[DataFrame, int]:
+    parts: int, bounds: tuple[int, int], min_col: str | None = None,
+) -> tuple[DataFrame, int, object]:
     """Deterministic-bucket enumeration (see
     :func:`assign_global_order_counted` ``bounds`` mode). One shuffle
     job (which also materializes the upstream exactly once) + one
-    O(buckets) collect."""
+    O(buckets) collect. Returns (numbered_df, total_rows, min of
+    ``min_col``); the minimum rides the per-bucket counts collect
+    (None without ``min_col`` or rows)."""
     lo, hi = bounds
     n_buckets = parts * 64
     span = max(int(hi) - int(lo), 1)
@@ -199,11 +215,14 @@ def _assign_order_bucketed(
         .sortWithinPartitions("__gid", *sort_cols)
         .localCheckpoint(eager=True)
     )
-    counts = {
-        r["__gid"]: r["n"]
-        for r in ranged.groupBy("__gid")
-        .agg(F.count("*").alias("n")).collect()
-    }
+    lowest = F.min(min_col) if min_col else F.lit(None)
+    rows = (
+        ranged.groupBy("__gid")
+        .agg(F.count("*").alias("n"), lowest.alias("lo")).collect()
+    )
+    counts = {r["__gid"]: r["n"] for r in rows}
+    col_min = min((r["lo"] for r in rows if r["lo"] is not None),
+                  default=None)
     offsets = {}
     acc = start
     for g in sorted(counts):
@@ -232,7 +251,12 @@ def _assign_order_bucketed(
                 emitted[int(g)] = emitted.get(int(g), 0) + int(c)
             yield pdf.drop(columns=["__gid"])
 
-    return ranged.mapInPandas(number, schema=schema), acc - start
+    return ranged.mapInPandas(number, schema=schema), acc - start, col_min
+
+
+def _union(frames: list[DataFrame]) -> DataFrame | None:
+    """unionByName fold of a frame list; None when it is empty."""
+    return reduce(lambda a, b: a.unionByName(b), frames) if frames else None
 
 
 @dataclass
@@ -321,19 +345,63 @@ class CrawlEngine:
         base = canonicalize("url") if self.config.canonicalize else F.col("url")
         return F.xxhash64(base, F.lit(1))
 
-    def _materialize(self, df: DataFrame, name: str, gen: int) -> DataFrame:
-        """Truncate lineage + persist a generation's output. With a
-        SnapshotStore this is a durable, atomically-committed snapshot
-        (resume point); otherwise a LAZY localCheckpoint: the frame is
-        computed and pinned by the FIRST action that touches it (the
-        frontier's own count, or the next generation's frontier job
-        for the fetched frame), so each generation pays one Spark job
-        per frame instead of two (materialize + count). Parse-once
-        still holds — the checkpoint computes once, later readers hit
-        the pinned blocks."""
+    def _materialize(
+        self, df: DataFrame, name: str, gen: int, count: bool = False,
+    ) -> tuple[DataFrame, int | None]:
+        """Truncate lineage + persist a generation's output; returns
+        (frame, rows). With a SnapshotStore this is a durable,
+        atomically-committed snapshot (resume point) read back with the
+        schema it was written with (no inference job), and ``rows``
+        rides the write (``SnapshotStore.stats``): no count job.
+        Otherwise a LAZY localCheckpoint: the frame is computed and
+        pinned by the FIRST action that touches it (a count here, or
+        the next generation's frontier job for the fetched frame), so
+        each generation pays one Spark job per frame instead of two
+        (materialize + count); ``rows`` is that count when ``count``
+        is set, else None. Parse-once still holds — the checkpoint
+        computes once, later readers hit the pinned blocks."""
         if self.checkpoint is not None:
-            return self.checkpoint.commit(df, name, gen)
-        return df.localCheckpoint(eager=False)
+            out = self.checkpoint.commit(df, name, gen)
+            return out, self.checkpoint.stats(gen, name)["rows"]
+        out = df.localCheckpoint(eager=False)
+        return out, (out.count() if count else None)
+
+    def _materialize_frontier(
+        self, enqueued: DataFrame, gen: int, known: tuple | None,
+    ) -> tuple[DataFrame, int, int | None]:
+        """Materialize the generation's frontier; returns (frame,
+        n_enqueued, min depth). Both numbers ride a job that runs
+        anyway: the checkpoint's lineage aggregate, the bucketed
+        ordering's counts collect (``known``), or — latency mode, no
+        checkpoint — the aggregate that pins the lazy checkpoint, in
+        place of a bare count()."""
+        if self.checkpoint is not None:
+            out = self.checkpoint.commit(enqueued, "frontier", gen)
+            st = self.checkpoint.stats(gen, "frontier")
+            return out, st["rows"], st["depth_min"]
+        out = enqueued.localCheckpoint(eager=False)
+        if known is not None:
+            return (out, *known)
+        row = out.agg(F.count(F.lit(1)).alias("n"),
+                      F.min("depth").alias("lo")).collect()[0]
+        return out, row["n"], row["lo"]
+
+    @staticmethod
+    def _host_health(fetched: DataFrame) -> DataFrame:
+        """The circuit breaker's per-host partial aggregate (host,
+        n_fetches, n_errors) over fetched rows. Lazy: it folds into the
+        next generation's first job."""
+        from flyscrape_spark.operators.politeness import error_status_expr
+
+        return (
+            fetched.groupBy("host")
+            .agg(
+                F.count("*").alias("n_fetches"),
+                F.sum(F.when(error_status_expr(), 1).otherwise(0))
+                .alias("n_errors"),
+            )
+            .localCheckpoint(eager=False)
+        )
 
     @staticmethod
     def dedupe_candidates(cand: DataFrame, fingerprint: bool = False) -> DataFrame:
@@ -389,7 +457,25 @@ class CrawlEngine:
         it through the driver as a Python list would serialize
         O(seeds) rows through Py4J before the first job. ``n_seeds``
         (DataFrame mode) is the seed-count hint used for the ordering
-        bounds; bad hints only cost shuffle balance, never order."""
+        bounds; bad hints only cost shuffle balance, never order.
+
+        Side effect of the hint: the first generation this call runs
+        picks its execution mode (``_set_generation_mode``) from
+        ``n_seeds`` x 32 — also when a checkpoint resumes the crawl at a
+        later generation, whose frontier the hint does not describe. A
+        hint at or above ``small_generation_rows`` / 32 selects
+        throughput mode (AQE on, the SparkSession's shuffle partitions,
+        bucketed ordering), one below it latency mode (AQE off, 4
+        shuffle partitions, a single-partition window sort), and so
+        does the seed count when the hint is omitted. The mode moves
+        cost only; the crawl's output is the same in both.
+
+        A DataFrame seed may carry its own ``depth`` column (default
+        0). A generation whose URLs ALL lie past ``config.depth`` is
+        still deduplicated, ordered and marked seen, but nothing in it
+        is fetchable: it skips robots.txt, fetch and parse, commits
+        empty ``fetched``/``links`` tables under a checkpoint, and ends
+        the crawl (no links means no next generation)."""
         self._base_aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
         self._base_parts = self.spark.conf.get("spark.sql.shuffle.partitions", "32")
         try:
@@ -437,11 +523,8 @@ class CrawlEngine:
                 seed_rows.append((url, 0, int(i), 0))
         candidates = spark.createDataFrame(seed_rows, CAND_SCHEMA)
         seed_urls = [r[0] for r in seed_rows]
-        seed_hosts = []
-        for u in seed_urls:
-            h = urlparse(u).netloc.lower()
-            if h:
-                seed_hosts.append(h)
+        # host_of semantics (port and userinfo stripped), as table mode
+        seed_hosts = [h for h in map(host_of_str, seed_urls) if h]
         return candidates, len(seed_rows), validators(config, seed_urls, seed_hosts)
 
     def _run(self, seeds, n_seeds: int | None = None) -> CrawlResult:
@@ -474,12 +557,14 @@ class CrawlEngine:
             # snapshot manifests stay the durable source of truth)
             for frame in seen_frames:
                 self.seen_store.append(frame)
-        if self.seen_bloom is not None:
-            for frame in seen_frames:
-                self.seen_bloom.add_keys(frame)
-        if self.seen_cuckoo is not None:
-            for frame in seen_frames:
-                self.seen_cuckoo.add_keys(frame)
+        for prefilter in (self.seen_bloom, self.seen_cuckoo):
+            if prefilter is not None:
+                for frame in seen_frames:
+                    prefilter.add_keys(frame)
+        if config.host_cooldown_ratio is not None and result_frames:
+            # the breaker's memory: host health over the resumed
+            # fetched snapshots, as the uninterrupted crawl built it
+            health_frames.append(self._host_health(_union(result_frames)))
 
         def current_seen() -> DataFrame:
             if self.seen_store is not None and self.seen_store.exists():
@@ -488,10 +573,7 @@ class CrawlEngine:
                 return spark.createDataFrame(
                     [], SEEN_SCHEMA_FP if config.seen_fingerprint
                     else SEEN_SCHEMA)
-            out = seen_frames[0]
-            for frame in seen_frames[1:]:
-                out = out.unionByName(frame)
-            return out
+            return _union(seen_frames)
 
         gen = start_gen
         prev_enqueued = n_seed_rows
@@ -561,12 +643,12 @@ class CrawlEngine:
             # Latency mode: one-partition window sort (fine for small
             # generations). Throughput mode: two-phase range-partition
             # enumeration — no single-task global sort at scale.
-            n_enqueued = None
+            order_stats = None
             if self.assign_order and not self._latency_mode:
-                # counted variant: the generation's row count falls
-                # out of the two-phase enumeration's per-bucket
-                # counts, saving the separate count() job (and its
-                # 32-task schedule/barrier) every generation. The
+                # the generation's row count (and minimum depth) fall
+                # out of the two-phase enumeration's per-bucket counts,
+                # saving a separate count() job (and its 32-task
+                # schedule/barrier) every generation. The
                 # parent_order bounds are KNOWN (a generation's
                 # parents are exactly the previous generation's
                 # discovery_order slice; gen 0 = seed indices), so
@@ -579,9 +661,10 @@ class CrawlEngine:
                         max(next_order - prev_enqueued, 0),
                         max(next_order, 1),
                     )
-                enqueued, n_enqueued = assign_global_order_counted(
+                enqueued, *order_stats = _assign_order_bucketed(
                     enqueued, ["parent_order", "pos"], "discovery_order",
-                    start=next_order, bounds=order_bounds,
+                    next_order, spark.sparkContext.defaultParallelism,
+                    order_bounds, min_col="depth",
                 )
             elif self.assign_order:
                 w = Window.orderBy("parent_order", "pos")
@@ -596,11 +679,9 @@ class CrawlEngine:
             seen_cols = ["url", "url_key", "depth", "discovery_order"]
             if config.seen_fingerprint:
                 seen_cols.append("url_key2")
-            enqueued = self._materialize(
-                enqueued.select(*seen_cols), "frontier", gen,
+            enqueued, n_enqueued, min_depth = self._materialize_frontier(
+                enqueued.select(*seen_cols), gen, order_stats,
             )
-            if n_enqueued is None:
-                n_enqueued = enqueued.count()
             if n_enqueued == 0:
                 break
             next_order += n_enqueued
@@ -624,12 +705,40 @@ class CrawlEngine:
             else:
                 seen_frames.append(enqueued)
                 if len(seen_frames) > 16:
-                    compacted = seen_frames[0]
-                    for frame in seen_frames[1:]:
-                        compacted = compacted.unionByName(frame)
                     # lazy: the compaction runs inside the next
                     # generation's anti-join job, not as its own job
-                    seen_frames = [compacted.localCheckpoint(eager=False)]
+                    seen_frames = [
+                        _union(seen_frames).localCheckpoint(eager=False)]
+
+            gen_metrics = {"generation": gen, "enqueued": n_enqueued}
+
+            # 5a. past the depth limit: every URL of this generation is
+            # deeper than config.depth, so no row survives step 6 and
+            # the fetch side (robots, fetch, parse, fan-out) would run
+            # over nothing and yield no links — the crawl ends here.
+            # The test is on the data (min depth, from the frontier
+            # step's own aggregate), so URLs re-admitted at their
+            # ORIGINAL depth by invalidation are still fetched. It
+            # needs an earlier fetched frame for the empty table's
+            # schema; a crawl whose FIRST generation is all past the
+            # limit (deep table seeds) takes the full path instead.
+            if (config.depth is not None and min_depth is not None
+                    and min_depth > config.depth and result_frames):
+                gen_metrics["sec"] = round(time.time() - gen_t0, 3)
+                if self.collect_metrics:
+                    gen_metrics["fetched"] = 0
+                metrics.append(gen_metrics)
+                if self.checkpoint is not None:
+                    # the manifest keeps its frontier/fetched/links shape
+                    for table, schema in (
+                        ("fetched", result_frames[-1].schema),
+                        ("links", CAND_SCHEMA),
+                    ):
+                        self.checkpoint.commit(
+                            spark.createDataFrame([], schema), table, gen)
+                    self.checkpoint.commit_meta(gen, gen_metrics, next_order)
+                gen += 1
+                break
 
             # 6. validators run at fetch time (scrape.go:162-168);
             #    depth filter is row-wise (inclusive <=, modules/depth/
@@ -668,10 +777,7 @@ class CrawlEngine:
             # host-cardinality partial aggregates, so the anti-join's
             # build side stays tiny at any crawl size.
             if config.host_cooldown_ratio is not None and health_frames:
-                h = health_frames[0]
-                for hf in health_frames[1:]:
-                    h = h.unionByName(hf)
-                tot = h.groupBy("host").agg(
+                tot = _union(health_frames).groupBy("host").agg(
                     F.sum("n_fetches").alias("n"),
                     F.sum("n_errors").alias("e"),
                 )
@@ -700,27 +806,23 @@ class CrawlEngine:
                     .agg(F.max("scheme").alias("scheme"))
                 )
                 if robots_frames:
-                    known = robots_frames[0]
-                    for rf in robots_frames[1:]:
-                        known = known.unionByName(rf)
                     new_hosts = hosts.join(
-                        known.select("host"), "host", "left_anti"
+                        _union(robots_frames).select("host"), "host",
+                        "left_anti",
                     )
                 else:
-                    known = None
                     new_hosts = hosts
-                fetched_robots = self._materialize(
-                    robots_table(new_hosts, self.transport), "robots", gen
+                # the increment's row count gates the robots-join
+                # broadcast (millions of hosts at design scale must
+                # NOT be force-broadcast); it rides the commit's write,
+                # or pins the lazy checkpoint
+                fetched_robots, n_new_hosts = self._materialize(
+                    robots_table(new_hosts, self.transport), "robots", gen,
+                    count=True,
                 )
                 robots_frames.append(fetched_robots)
-                # cheap count on the materialized increment: gates the
-                # robots-join broadcast (millions of hosts at design
-                # scale must NOT be force-broadcast)
-                n_robots_hosts += fetched_robots.count()
-                robots_all = (
-                    known.unionByName(fetched_robots)
-                    if known is not None else fetched_robots
-                )
+                n_robots_hosts += n_new_hosts
+                robots_all = _union(robots_frames)
                 fetchable = (
                     allowed_filter(fetchable, robots_all, n_hosts=n_robots_hosts)
                     .filter(F.col("robots_allowed"))
@@ -785,25 +887,15 @@ class CrawlEngine:
                 body_flag = F.col("has_body")
             else:
                 body_flag = F.col("body").isNotNull()
-            fetched = self._materialize(fetched, "fetched", gen)
+            # checkpointed crawls get the row count free from the
+            # commit; plain crawls count only when metrics are asked
+            # for (that count is the action that pins the fetch)
+            fetched, n_fetched = self._materialize(
+                fetched, "fetched", gen, count=self.collect_metrics)
             result_frames.append(fetched)
 
             if config.host_cooldown_ratio is not None:
-                from flyscrape_spark.operators.politeness import (
-                    error_status_expr,
-                )
-
-                health_frames.append(
-                    fetched.groupBy("host")
-                    .agg(
-                        F.count("*").alias("n_fetches"),
-                        F.sum(
-                            F.when(error_status_expr(), 1).otherwise(0)
-                        ).alias("n_errors"),
-                    )
-                    # lazy: folds into the next generation's first job
-                    .localCheckpoint(eager=False)
-                )
+                health_frames.append(self._host_health(fetched))
 
             # 10. link fan-out -> next generation's candidates.
             #     Non-2xx pages still follow links (deferred
@@ -841,13 +933,9 @@ class CrawlEngine:
                         "parent_order", F.col("pos").cast("int"))
             )
 
-            gen_metrics = {
-                "generation": gen,
-                "enqueued": n_enqueued,
-                "sec": round(time.time() - gen_t0, 3),
-            }
+            gen_metrics["sec"] = round(time.time() - gen_t0, 3)
             if self.collect_metrics:
-                gen_metrics["fetched"] = fetched.count()
+                gen_metrics["fetched"] = n_fetched
             metrics.append(gen_metrics)
             if self.checkpoint is not None:
                 # publish the generation atomically: frontier + fetched
@@ -880,9 +968,11 @@ class CrawlEngine:
         if results is None:
             results = spark.createDataFrame([], self._empty_results_schema())
 
-        robots_all = None
-        for rf in robots_frames:
-            robots_all = rf if robots_all is None else robots_all.unionByName(rf)
+        robots_all = _union(robots_frames)
+        if robots_all is None and config.respect_robots and gen > start_gen:
+            # a crawl that ran only past-depth generations probed no
+            # robots.txt; its cache is empty, not absent
+            robots_all = spark.createDataFrame([], ROBOTS_SCHEMA)
 
         # current_seen(), not the loop-local binding: when the loop
         # exits via max_generations the in-loop `seen` predates the

@@ -9,15 +9,26 @@ Iceberg-shaped so a real catalog can be swapped in on a cluster:
     root/
       data/<table>/gen=NNNNNN/part-*.parquet   -- immutable data files
       _manifests/gen-NNNNNN.json               -- atomic commit marker:
-          {gen, tables, metrics, next_order, lineage}
+          {gen, tables, schemas, metrics, next_order, lineage}
 
 A generation is visible iff its manifest exists; manifests are written
 tmp+rename (atomic on POSIX), so a killed job leaves at most an
 invisible partial data dir and resume starts from the last *complete*
 generation with zero re-fetches of committed work.
 
-Per-partition lineage (north_rule): each commit records per-partition
-row counts and host ranges for the generation's frontier.
+``schemas`` maps each table to the Spark schema (JSON) it was written
+with; every read — the commit's read-back, ``resume``, ``invalidate``
+— passes it to the reader, so no parquet footer is read in a Spark job
+to infer it. Manifests written before the field existed still load
+(their tables are read with inference).
+
+Per-partition lineage (north_rule): each commit records, for the
+generation's frontier, per-partition row counts, host ranges
+(``host_of``) and minimum depth, all from one aggregate over the
+committed frontier. Every table's row count rides its parquet write as
+an ``Observation``. The engine reads a generation's enqueued count and
+minimum depth from these (:meth:`SnapshotStore.stats`), so neither
+costs a job of its own.
 
 The reference's analog is the bbolt HTTP cache
 (/root/reference/modules/cache/cache.go:46-81) — a KV of fetched
@@ -32,8 +43,11 @@ import os
 import tempfile
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from flyscrape_spark.functions.urls import host_of
 
 
 class SnapshotStore:
@@ -55,27 +69,46 @@ class SnapshotStore:
     def commit(self, df: DataFrame, table: str, gen: int) -> DataFrame:
         """Write a generation's table and return the read-back handle
         (lineage-truncated: downstream plans scan parquet, not the
-        upstream DAG)."""
+        upstream DAG). The read-back takes the written frame's schema,
+        so it runs no schema-inference job; the row count rides the
+        write (an ``Observation``), and a frontier table also gets its
+        lineage aggregate. Both land in :meth:`stats`."""
         path = str(self._data_dir(table, gen))
-        df.write.mode("overwrite").parquet(path)
-        self._pending.setdefault(gen, {"tables": {}})["tables"][table] = path
-        spark = df.sparkSession
-        out = spark.read.parquet(path)
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite").parquet(path)
+        out = df.sparkSession.read.schema(df.schema).parquet(path)
+        pending = self._pending.setdefault(
+            gen, {"tables": {}, "schemas": {}, "stats": {}})
+        pending["tables"][table] = path
+        pending["schemas"][table] = json.loads(out.schema.json())
+        stats = {"rows": obs.get["rows"]}
         if table == "frontier":
-            self._pending[gen]["lineage"] = self._partition_lineage(out)
+            pending["lineage"] = self._partition_lineage(out)
+            stats["depth_min"] = min(
+                (p["depth_min"] for p in pending["lineage"]), default=None)
+        pending["stats"][table] = stats
         return out
 
-    def _partition_lineage(self, frontier: DataFrame) -> list[dict]:
-        """Per-partition lineage: row count + host/url-key range."""
-        host = F.regexp_extract("url", r"^https?://([^/]+)", 1)
+    def stats(self, gen: int, table: str) -> dict:
+        """What committing ``table`` for the pending generation ``gen``
+        measured on the way: ``rows``, and for the frontier also
+        ``depth_min`` (None when empty)."""
+        return self._pending[gen]["stats"][table]
+
+    @staticmethod
+    def _partition_lineage(frontier: DataFrame) -> list[dict]:
+        """Per-partition lineage: row count, host range and minimum
+        depth, in one aggregate."""
         rows = (
-            frontier.withColumn("host", host)
+            frontier.withColumn("host", host_of("url"))
             .withColumn("pid", F.spark_partition_id())
             .groupBy("pid")
             .agg(
                 F.count("*").alias("rows"),
                 F.min("host").alias("host_min"),
                 F.max("host").alias("host_max"),
+                F.min("depth").alias("depth_min"),
             )
             .collect()
         )
@@ -87,6 +120,7 @@ class SnapshotStore:
         manifest = {
             "gen": gen,
             "tables": pending["tables"],
+            "schemas": pending.get("schemas", {}),
             "lineage": pending.get("lineage", []),
             "metrics": metrics,
             "next_order": next_order,
@@ -126,7 +160,7 @@ class SnapshotStore:
                 path = m["tables"].get(table)
                 if not path:
                     continue
-                df = spark.read.parquet(path)
+                df = self._read(spark, m, table)
                 hits = df.filter(F.col("url").isin(urls))
                 hit_rows = hits.select(
                     "url", *(["depth"] if "depth" in df.columns else [])
@@ -175,6 +209,16 @@ class SnapshotStore:
 
     # -- resume -------------------------------------------------------------
 
+    @staticmethod
+    def _read(spark: SparkSession, manifest: dict, table: str) -> DataFrame:
+        """A committed table, read with its recorded schema (no
+        inference job); manifests without ``schemas`` infer it."""
+        path = manifest["tables"][table]
+        schema = manifest.get("schemas", {}).get(table)
+        if schema is None:
+            return spark.read.parquet(path)
+        return spark.read.schema(StructType.fromJson(schema)).parquet(path)
+
     def manifests(self) -> list[dict]:
         out = []
         for p in sorted((self.root / "_manifests").glob("gen-*.json")):
@@ -186,22 +230,23 @@ class SnapshotStore:
         """Return engine state after the last complete generation, or
         None for a fresh crawl:
         (seen_frames, candidates, result_frames, metrics, start_gen,
-        next_order)."""
+        next_order). Tables are read with the schemas their manifests
+        record, so resuming launches no Spark job."""
         manifests = self.manifests()
         if not manifests:
             return None
         last = manifests[-1]
         gens = [m["gen"] for m in manifests]
         seen_frames = [
-            spark.read.parquet(m["tables"]["frontier"])
+            self._read(spark, m, "frontier")
             for m in manifests if "frontier" in m["tables"]
         ]
         result_frames = [
-            spark.read.parquet(m["tables"]["fetched"])
+            self._read(spark, m, "fetched")
             for m in manifests if "fetched" in m["tables"]
         ]
         if "links" in last["tables"]:
-            candidates = spark.read.parquet(last["tables"]["links"])
+            candidates = self._read(spark, last, "links")
         else:
             candidates = None
         # force-refetch queue: invalidated URLs re-enter as candidates
